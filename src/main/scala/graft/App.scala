@@ -54,25 +54,7 @@ object App {
 
   private def seg(sb: java.lang.StringBuilder, s: TextSeg): Unit = {
     sb.append("{\"offset\":").append(s.offset)
-      .append(",\"text\":\"").append(escape(s.text))
+      .append(",\"text\":\"").append(Json.escape(s.text))
       .append("\",\"length\":").append(s.length).append('}')
-  }
-
-  private def escape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
   }
 }

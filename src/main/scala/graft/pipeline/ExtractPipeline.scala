@@ -1,14 +1,24 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors,
+  ThreadFactory}
+
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.ExtractTurn
+
 /** The distributed extraction pipeline (SURVEY.md §3.4):
   *
-  *   read -> (anti-join vs committed manifest) -> salted repartition ->
-  *   sortWithinPartitions(conv_id, turn_idx) -> mapPartitions(extract) ->
+  *   read -> (filter to uncommitted buckets) -> extract_turn(text) ->
+  *   repartition(bucket) -> sortWithinPartitions(conv_id, turn_idx) ->
   *   write per bucket + manifest commit
+  *
+  * The kernel runs as the [[ExtractTurn]] Catalyst expression inside the
+  * scan stage's generated code: no typed object boundary on either side.
   *
   * Scale notes (the 100 TB argument):
   *   - extraction is per-turn stateless, so the heavy stage is shuffled on
@@ -18,31 +28,42 @@ import org.apache.spark.sql.expressions.Window
   *     over the already-extracted narrow columns, partitioned by conv_id —
   *     the only stage where a 8000-turn conversation lands on one task,
   *     and it only carries (conv_id, turn_idx, nBytes)-sized rows;
-  *   - resume is a partition-pruning filter (committed bucket list pushed
-  *     down as `!bucket.isin(...)`), not a data-scan anti-join, so a
-  *     restart reads only uncommitted input partitions.
+  *   - resume skips committed buckets with an `isin` filter on the
+  *     bucket hash; the input itself is not bucketed, so every batch
+  *     rescans the input and filters by hash before extracting (only the
+  *     kernel work, the shuffle and the write are limited to the batch).
   */
 object ExtractPipeline {
 
-  /** Pure transform: one serde boundary per task, zero shuffles. */
-  def extract(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
+  /** The one Spark form of the payload kernel: (conv_id, turn_idx) plus the
+    * [[ExtractTurn]] struct's fields, so the result has exactly
+    * [[ExtractedTurn]]'s encoder schema. `turn_idx` is asserted non-null,
+    * as that schema requires: a null turn_idx fails its task.
+    */
+  private def extractColumns(turns: DataFrame): Dataset[ExtractedTurn] = {
     import turns.sparkSession.implicits._
-    turns.mapPartitions(_.map(TurnExtractor.extract))
+    val turnIdx = GraftShims.column(
+      AssertNotNull(GraftShims.expression(col("turn_idx"))))
+    turns
+      .select(col("conv_id"), turnIdx.as("turn_idx"),
+        ExtractTurn.extractTurn(col("text")).as("_x"))
+      .select(col("conv_id"), col("turn_idx"), col("_x.*"))
+      .as[ExtractedTurn]
   }
 
-  /** Zero-shuffle narrow path: project to the 3 columns the kernel reads
-    * BEFORE the typed boundary, so parquet scans only conv_id, turn_idx,
-    * text (pruning verified via .explain ReadSchema). This is the default
-    * heavy stage: per-turn statelessness means map-side extraction on
-    * scan partitions, which are size-balanced by the source
-    * (maxPartitionBytes), so no shuffle and no skew.
+  /** Pure transform: per-turn extraction on the input's partitioning. */
+  def extract(turns: Dataset[Turn]): Dataset[ExtractedTurn] =
+    extractColumns(turns.toDF())
+
+  /** Zero-shuffle narrow path: the expression reads only conv_id,
+    * turn_idx and text, so parquet scans only those 3 columns (pruning
+    * verified via .explain ReadSchema). This is the default heavy stage:
+    * per-turn statelessness means map-side extraction on scan partitions,
+    * which are size-balanced by the source (maxPartitionBytes), so no
+    * shuffle and no skew.
     */
-  def extractNarrow(turns: DataFrame): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns.select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[TurnLite]
-      .mapPartitions(_.map(TurnExtractor.extract(_: TurnLite)))
-  }
+  def extractNarrow(turns: DataFrame): Dataset[ExtractedTurn] =
+    extractColumns(turns)
 
   /** Bucket column: stable function of conv_id only, so one conversation
     * always lands in one bucket (ordering + co-location), while buckets
@@ -53,15 +74,11 @@ object ExtractPipeline {
   /** The balanced heavy stage: salt on (conv_id, turn_idx) — per-turn
     * statelessness makes this exact, defusing any conversation skew.
     */
-  def extractBalanced(turns: Dataset[Turn], partitions: Int): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns
+  def extractBalanced(turns: Dataset[Turn], partitions: Int): Dataset[ExtractedTurn] =
+    extractColumns(turns
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .repartition(partitions,
-        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(partitions)))
-      .as[TurnLite]
-      .mapPartitions(_.map(TurnExtractor.extract(_: TurnLite)))
-  }
+        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(partitions))))
 
   /** Stable conversation ordering + conversation-relative offsets: the
     * window stage the north rule names.
@@ -73,7 +90,7 @@ object ExtractPipeline {
     * hash key that cannot have a hot value. At table scale call this on
     * the written table (readCommitted), where the narrow branch is a
     * column-pruned parquet scan. An UNMATERIALIZED input (an in-flight
-    * mapPartitions Dataset — detected by the object boundary in its
+    * extraction — detected by the [[ExtractTurn]] expression in its
     * plan) is materialized once instead of running extraction in both
     * branches (VERDICT r02 #5). Materialization is an eager
     * localCheckpoint, NOT persist: a persisted plan lives in
@@ -88,11 +105,8 @@ object ExtractPipeline {
   def withConvOrder(extracted: Dataset[ExtractedTurn]): DataFrame = {
     val w = Window.partitionBy("conv_id").orderBy("turn_idx")
     val df0 = extracted.toDF()
-    val computed = df0.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject =>
-        true
-      case _ => false
-    }
+    val computed = df0.queryExecution.analyzed.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[ExtractTurn])))
     val df = if (computed) df0.localCheckpoint(true) else df0
     val narrow = df
       .select(col("conv_id"), col("turn_idx"),
@@ -107,9 +121,20 @@ object ExtractPipeline {
     df.join(narrow, Seq("conv_id", "turn_idx"))
   }
 
-  /** Checkpointed run: processes only uncommitted buckets, committing a
-    * manifest entry per bucket batch. Killing the job between batches and
-    * re-running converges to the same table (idempotent resume).
+  /** Checkpointed run: processes only uncommitted buckets, one write job
+    * and one manifest commit per batch of buckets. Re-running after a
+    * kill converges to the same table (idempotent resume).
+    *
+    * Batches are double-buffered: while batch k writes and commits, batch
+    * k+1 is already planned, scanned and extracted, so at most two
+    * batches are in flight (a fixed depth). Each batch commits its
+    * buckets as soon as its own write job returns; a kill therefore loses
+    * at most two batches' work, and only committed buckets are ever
+    * listed in the manifest. The batch threads carry the caller's Spark
+    * local properties and active session (job group, description,
+    * scheduler pool), so cancelling the caller's job group cancels them.
+    * A failed batch is rethrown once the other in-flight batch has
+    * finished; no batch starts after a failure has been seen.
     *
     * @param batchBuckets buckets per write job (an Iceberg snapshot analog)
     */
@@ -120,25 +145,23 @@ object ExtractPipeline {
       nBuckets: Int,
       batchBuckets: Int = 8,
       inputFingerprint: String = ""): Unit = {
-    import spark.implicits._
     val catalog = new HadoopManifestCatalog(
       outDir, spark.sparkContext.hadoopConfiguration)
     val done = catalog.committedBuckets()
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return
 
-    val withBucket = turns.withColumn("bucket", bucketCol(nBuckets))
-
-    for (batch <- todo.grouped(batchBuckets)) {
-      // partition-pruning filter: only uncommitted buckets are read
-      val slice = withBucket
-        .filter(col("bucket").isin(batch: _*))
-        .drop("bucket")
+    def writeBatch(batch: Seq[Int]): Unit = {
+      // the input is not bucketed: each batch rescans it and keeps only its
+      // own buckets' turns by hash, before the kernel runs
+      val slice = turns.toDF().filter(bucketCol(nBuckets).isin(batch: _*))
       val extracted = extractNarrow(slice)
         .withColumn("bucket", bucketCol(nBuckets))
-        // deterministic layout: one conversation per bucket, sorted
+        // deterministic layout: one conversation per bucket, sorted; the
+        // writer needs its rows grouped by bucket, so bucket leads the one
+        // sort (otherwise the planner adds a second sort on bucket alone)
         .repartition(batch.size, col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
       // per-bucket metrics ride the write job itself (observe = task-side
       // accumulators): zero extra jobs vs the old per-bucket read-back
       // loop, which was a driver bottleneck at 10^5+ buckets. `bytes` is
@@ -164,14 +187,51 @@ object ExtractPipeline {
         .partitionBy("bucket")
         .parquet(outDir)
       val m = obs.get
-      for (b <- batch) {
-        catalog.commit(
-          ManifestEntry(b,
-            m(s"rows_$b").asInstanceOf[Long],
-            m(s"bytes_$b").asInstanceOf[Long],
-            inputFingerprint, graft.BuildInfo.version))
-      }
+      catalog.commitAll(batch.map { b =>
+        ManifestEntry(b,
+          m(s"rows_$b").asInstanceOf[Long],
+          m(s"bytes_$b").asInstanceOf[Long],
+          inputFingerprint, graft.BuildInfo.version)
+      })
     }
+
+    val pool = Executors.newFixedThreadPool(InFlightBatches, batchThreads)
+    val inFlight = scala.collection.mutable.Queue[CompletableFuture[Unit]]()
+    // waits for the oldest batch; if it failed, lets the other in-flight
+    // batch finish first and then rethrows the failure
+    def awaitOldest(): Unit =
+      try inFlight.dequeue().get()
+      catch {
+        case e: ExecutionException =>
+          while (inFlight.nonEmpty) {
+            try inFlight.dequeue().get()
+            catch { case o: ExecutionException => e.getCause.addSuppressed(o.getCause) }
+          }
+          throw e.getCause
+      }
+    def awaitAll(): Unit = while (inFlight.nonEmpty) awaitOldest()
+    try {
+      for (batch <- todo.grouped(batchBuckets)) {
+        if (inFlight.size == InFlightBatches) awaitOldest()
+        // a batch that already failed stops the run before the next starts
+        if (inFlight.exists(_.isCompletedExceptionally)) awaitAll()
+        inFlight.enqueue(SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(
+          writeBatch(batch)))
+      }
+      awaitAll()
+    } finally pool.shutdown()
+  }
+
+  /** Batches of [[runCheckpointed]] in flight at once: one writing and
+    * committing, the next one planning, scanning and extracting.
+    */
+  private val InFlightBatches = 2
+
+  private val batchThreads: ThreadFactory = { r =>
+    val t = new Thread(r, "graft-checkpointed-batch")
+    t.setDaemon(true)
+    t
   }
 
   /** Anti-join resume variant: when the committed-partition list is too

@@ -3,6 +3,10 @@ package graft.pipeline
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
+import scala.concurrent.{blocking, Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import graft.Json
 
 /** Per-partition commit manifest — the Iceberg-facing contract behind a
   * trait (no Iceberg runtime jar exists in this sandbox, BASELINE.md):
@@ -17,6 +21,10 @@ trait TranscriptCatalog {
   def committedBuckets(): Set[Int]
   /** Atomically commit one bucket with its lineage + metrics. */
   def commit(entry: ManifestEntry): Unit
+  /** Commit several buckets; each commit is atomic on its own, and their
+    * order is unspecified. Returns once all have committed.
+    */
+  def commitAll(entries: Seq[ManifestEntry]): Unit = entries.foreach(commit)
 }
 
 /** One committed bucket's lineage record. `rows`/`bytes` come from
@@ -37,7 +45,8 @@ final case class ManifestEntry(
 object ManifestEntry {
   def toJson(e: ManifestEntry): String =
     s"""{"bucket":${e.bucket},"rows":${e.rows},"bytes":${e.bytes},""" +
-      s""""inputFingerprint":"${e.inputFingerprint}","version":"${e.version}"}"""
+      s""""inputFingerprint":${Json.quote(e.inputFingerprint)},""" +
+      s""""version":${Json.quote(e.version)}}"""
 }
 
 /** Hadoop-FS manifest: one JSON file per bucket under `_manifest/`,
@@ -64,8 +73,26 @@ final class HadoopManifestCatalog(outDir: String, conf: Configuration)
   }
 
   override def commit(entry: ManifestEntry): Unit = {
+    fs.mkdirs(manifestDir)
+    write(entry)
+  }
+
+  /** One file per bucket, so the commits are independent: they run
+    * concurrently (each one's create/rename round trips — a forked
+    * `chmod` per created file on a local FS without native Hadoop —
+    * overlap instead of adding up). Every commit is still tmp + atomic
+    * rename; a failure is rethrown after all commits have settled.
+    */
+  override def commitAll(entries: Seq[ManifestEntry]): Unit = {
+    fs.mkdirs(manifestDir)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val pending = entries.map(e => Future(blocking(write(e))))
+    pending.foreach(Await.ready(_, Duration.Inf))
+    pending.foreach(_.value.get.get)
+  }
+
+  private def write(entry: ManifestEntry): Unit = {
     val f = fs
-    f.mkdirs(manifestDir)
     val tmp = new Path(manifestDir, f"bucket-${entry.bucket}%05d.json._tmp")
     val dst = new Path(manifestDir, f"bucket-${entry.bucket}%05d.json")
     val out = f.create(tmp, true)

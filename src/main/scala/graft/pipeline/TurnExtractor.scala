@@ -57,9 +57,6 @@ object TurnExtractor {
   def extract(turn: Turn): ExtractedTurn =
     extract(turn.conv_id, turn.turn_idx, turn.text)
 
-  def extract(turn: TurnLite): ExtractedTurn =
-    extract(turn.conv_id, turn.turn_idx, turn.text)
-
   def extract(convId: String, turnIdx: Int, rawText: String): ExtractedTurn = {
     val text = if (rawText == null) "" else rawText
     val tooLargeBytes = byteGate(text)

@@ -13,13 +13,6 @@ final case class Turn(
     tool: String,
     ts: java.sql.Timestamp)
 
-/** Narrow projection of [[Turn]] — exactly what the extraction kernel
-  * consumes. Selecting these three columns *before* `as[...]` lets
-  * Catalyst push column pruning into the parquet scan (SURVEY.md §4.2)
-  * and skips the per-row timestamp/role/tool decode entirely.
-  */
-final case class TurnLite(conv_id: String, turn_idx: Int, text: String)
-
 /** Output row — FIXTURES.md §3. `error` is null for clean rows; a failed
   * row is never dropped (reference maps failures to an HTTP 400 per
   * document, CustomGlobalExceptionHandler.java:14-19 — our analog is a

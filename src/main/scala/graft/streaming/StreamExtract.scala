@@ -10,7 +10,7 @@ import graft.pipeline.{ExtractPipeline, ExtractedTurn, Turn}
   *
   * The reference is strictly synchronous request/response (SURVEY.md
   * §2.8) — per-turn extraction is stateless, so the streaming variant is
-  * the same `mapPartitions` kernel under `readStream`, with an optional
+  * the same `ExtractTurn` kernel under `readStream`, with an optional
   * watermarked per-conversation aggregate and a stateful
   * conversation-progress tracker (`mapGroupsWithState`) as the
   * cross-turn extension a transcript firehose needs.

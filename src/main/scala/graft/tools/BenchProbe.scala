@@ -34,14 +34,11 @@ object BenchProbe {
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
         .as[graft.pipeline.Turn]
       val raw = spark.read.parquet(inputDir)
-      time("narrow-1")(
-        graft.pipeline.ExtractPipeline.extractNarrow(raw).count())
-      time("narrow-2")(
-        graft.pipeline.ExtractPipeline.extractNarrow(raw).count())
-      time("narrow-3")(
-        graft.pipeline.ExtractPipeline.extractNarrow(raw).count())
-      time("balanced-96")(
-        graft.pipeline.ExtractPipeline.extractBalanced(turns, 96).count())
+      for (i <- 1 to 3)
+        time(s"narrow-$i")(graft.Bench.payloadToNoop(
+          graft.pipeline.ExtractPipeline.extractNarrow(raw)))
+      time("balanced-96")(graft.Bench.payloadToNoop(
+        graft.pipeline.ExtractPipeline.extractBalanced(turns, 96)))
       spark.stop()
     }
   }

@@ -45,12 +45,12 @@ object ClusterScaleProbe {
             .as("s"))
           .agg(count(lit(1)), sum("s.n_bytes"))
           .collect().head.getLong(0)
-      time("narrow-warm")(
-        graft.pipeline.ExtractPipeline.extractNarrow(raw).count())
+      def narrowJob(): Long = graft.Bench.payloadToNoop(
+        graft.pipeline.ExtractPipeline.extractNarrow(raw))
+      time("narrow-warm")(narrowJob())
       time("stats-warm")(statsJob())
       for (i <- 1 to 6) {
-        time(s"narrow-$i")(
-          graft.pipeline.ExtractPipeline.extractNarrow(raw).count())
+        time(s"narrow-$i")(narrowJob())
         time(s"stats-$i")(statsJob())
       }
       spark.stop()

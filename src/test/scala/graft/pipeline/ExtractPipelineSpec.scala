@@ -1,9 +1,17 @@
 package graft.pipeline
 
 import graft.SparkTestSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class ExtractPipelineSpec extends AnyFunSuite {
 
@@ -139,5 +147,148 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val before = ExtractPipeline.readCommitted(spark, dir).count()
     ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 2)
     assert(ExtractPipeline.readCommitted(spark, dir).count() == before)
+  }
+
+  /** Generated turns plus the cases the kernel itself decides: null and
+    * empty text, the g23 oversize turn and HTML.
+    */
+  private def edgeTurns(): Dataset[Turn] = {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0)
+    val html = "<html><body><nav><a href=\"/\">home</a></nav><h1>Report</h1>" +
+      "<p>First paragraph of the page.</p><p>Second one.</p>" +
+      "<footer>fine print</footer></body></html>"
+    Transcripts.generate(spark, 20).union(spark.createDataset(Seq(
+      Turn("edge", 0, "user", null, null, ts),
+      Turn("edge", 1, "user", "", null, ts),
+      Turn("edge", 2, "user", "x" * (TurnExtractor.maxTurnBytes + 1), null, ts),
+      Turn("edge", 3, "assistant", html, null, ts))))
+  }
+
+  test("extract, extractNarrow and extractBalanced equal the kernel per " +
+    "turn, including null text, the oversize turn and HTML") {
+    val turns = edgeTurns()
+    val expected = turns.collect()
+      .map(t => (t.conv_id, t.turn_idx) -> TurnExtractor.extract(t)).toMap
+    assert(expected(("edge", 2)).error != null)
+    assert(expected(("edge", 3)).extractedText.contains("First paragraph"))
+    assert(!expected(("edge", 3)).extractedText.contains("fine print"))
+    val paths = Seq(
+      "extract" -> ExtractPipeline.extract(turns),
+      "extractNarrow" -> ExtractPipeline.extractNarrow(turns.toDF()),
+      "extractBalanced" -> ExtractPipeline.extractBalanced(turns, 5))
+    def check(name: String, ds: Dataset[ExtractedTurn]): Unit = {
+      val got = ds.collect()
+      assert(got.length == expected.size, name)
+      for (e <- got)
+        assert(expected((e.conv_id, e.turn_idx)) == e,
+          s"$name mismatch at ${e.conv_id}/${e.turn_idx}")
+    }
+    for ((name, ds) <- paths) check(name, ds)
+    // the expression's interpreted path (no generated code) agrees too
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check("extractNarrow, interpreted",
+      ExtractPipeline.extractNarrow(turns.toDF()))
+    finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("checkpointed table schema is ExtractedTurn's encoder schema, " +
+    "nullability included, plus bucket") {
+    val dir = Files.createTempDirectory("graft-schema").toString
+    ExtractPipeline.runCheckpointed(spark, Transcripts.generate(spark, 10),
+      dir, nBuckets = 2)
+    val expected = Encoders.product[ExtractedTurn].schema
+    val files = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    for (f <- files) {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.toString), spark.sparkContext.hadoopConfiguration))
+      val written =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      assert(DataType.fromJson(written) == expected, f.toString)
+    }
+    assert(spark.read.parquet(dir).columns.toSeq ==
+      expected.fieldNames.toSeq :+ "bucket")
+  }
+
+  test("checkpointed batches run under the caller's job group and " +
+    "description, and commit every bucket") {
+    val sc = spark.sparkContext
+    val turns = Transcripts.generate(spark, 30)
+    val dir = Files.createTempDirectory("graft-jobgroup").toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("graft-checkpointed", "checkpointed write under test")
+    try ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 8,
+      batchBuckets = 2) // 4 batches, two in flight at a time
+    finally {
+      sc.clearJobGroup()
+      ListenerBusShim.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = jobs.asScala.toSeq
+    assert(seen.size >= 4, seen)
+    assert(seen.forall(_ == (("graft-checkpointed",
+      "checkpointed write under test"))), seen)
+    val cat = new HadoopManifestCatalog(dir, sc.hadoopConfiguration)
+    assert(cat.committedBuckets() == (0 until 8).toSet)
+    assert(ExtractPipeline.readCommitted(spark, dir).count() == turns.count())
+  }
+
+  test("a failed batch surfaces as an exception; the manifest lists " +
+    "exactly the buckets whose data was written") {
+    import spark.implicits._
+    val nBuckets = 8
+    val good = Transcripts.generate(spark, 60).toDF()
+    // a null turn_idx fails its batch's write job (the payload asserts it
+    // non-null); the victim sits in the second of four batches, so the
+    // first batch is in flight beside it
+    val victim = good.withColumn("bucket", ExtractPipeline.bucketCol(nBuckets))
+      .filter(col("bucket").isin(2, 3)).head()
+    val bad = good.filter(col("conv_id") === victim.getAs[String]("conv_id"))
+      .limit(1).withColumn("turn_idx", lit(null).cast("int"))
+    val dir = Files.createTempDirectory("graft-failure").toString
+    val err = intercept[Exception] {
+      ExtractPipeline.runCheckpointed(spark, good.union(bad).as[Turn], dir,
+        nBuckets, batchBuckets = 2)
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
+    assert(causes.contains("NULL"), causes)
+    val committed = new HadoopManifestCatalog(dir,
+      spark.sparkContext.hadoopConfiguration).committedBuckets()
+    val written = Files.list(Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("bucket=") &&
+        Files.list(p).iterator().asScala.exists(_.toString.endsWith(".parquet")))
+      .map(_.getFileName.toString.stripPrefix("bucket=").toInt).toSet
+    assert(committed == written)
+    assert(!committed.contains(victim.getAs[Long]("bucket").toInt))
+    assert(Set(0, 1).subsetOf(committed), committed)
+  }
+
+  test("manifest JSON escapes quotes, backslashes and control chars") {
+    val dir = Files.createTempDirectory("graft-manifest-json").toString
+    val cat = new HadoopManifestCatalog(dir, spark.sparkContext.hadoopConfiguration)
+    val fingerprint = "src=\"a\\b\"\tn=3\nend\u0001"
+    val entries = Seq(
+      ManifestEntry(3, 10L, 200L, fingerprint, "v\"1"),
+      ManifestEntry(4, 0L, 0L, "", "0.1.0"))
+    cat.commitAll(entries)
+    assert(cat.committedBuckets() == Set(3, 4))
+    val rows = ExtractPipeline.readManifest(spark, dir).collect()
+      .sortBy(_.getInt(0)).toSeq
+    assert(rows == entries.map(e =>
+      Row(e.bucket, e.rows, e.bytes, e.inputFingerprint, e.version)))
   }
 }

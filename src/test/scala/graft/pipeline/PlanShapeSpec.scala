@@ -1,7 +1,13 @@
 package graft.pipeline
 
 import graft.SparkTestSession
+import graft.functions.ExtractTurn
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that make the engine scale are
@@ -12,6 +18,30 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** ExtractTurn occurrences in a plan: the kernel's evaluations per turn. */
+  private def kernels(plan: LogicalPlan): Int =
+    plan.collect { case p =>
+      p.expressions.map(_.collect { case k: ExtractTurn => k }.size).sum
+    }.sum
+
+  /** The optimized plan of every query `body` executes. */
+  private def executed(body: => Unit): Seq[LogicalPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      ListenerBusShim.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
 
   test("extractNarrow prunes the parquet scan to 3 columns, no shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft-planshape")
@@ -80,7 +110,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val phys = df.queryExecution.executedPlan.toString
     assert(phys.contains("Scan ExistingRDD"),
       "unmaterialized input must be checkpointed once, not re-extracted")
-    assert(!phys.contains("MapPartitions"),
+    assert(kernels(df.queryExecution.optimizedPlan) == 0,
       "extraction must not run inside the consuming plan")
     // a materialized table input must NOT be cached
     val dir = java.nio.file.Files.createTempDirectory("graft-convorder")
@@ -152,5 +182,37 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(plan.contains("LeftAnti"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  test("the payload kernel runs exactly once per turn in every plan") {
+    // the checkpointed write: one write command per batch, one kernel each
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernel-once")
+      .toString
+    val writes = executed {
+      ExtractPipeline.runCheckpointed(spark, Transcripts.generate(spark, 10),
+        dir, nBuckets = 4, batchBuckets = 2)
+    }.filter(_.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+    assert(writes.size == 2, writes)
+    for (p <- writes) assert(kernels(p) == 1, p)
+    // q26: the extraction plan itself
+    val q26 = graft.SparkEntry.queries("q26_extract_transcripts")(spark, sf)
+    assert(kernels(q26.queryExecution.optimizedPlan) == 1,
+      q26.queryExecution.optimizedPlan)
+    // q27: the in-flight input is checkpointed once; the window and join
+    // consume the checkpoint
+    var q27: org.apache.spark.sql.DataFrame = null
+    val checkpoint = executed {
+      q27 = graft.SparkEntry.queries("q27_extract_conv_order")(spark, sf)
+    }.filter(kernels(_) > 0)
+    assert(checkpoint.size == 1 && kernels(checkpoint.head) == 1, checkpoint)
+    assert(kernels(q27.queryExecution.optimizedPlan) == 0,
+      q27.queryExecution.optimizedPlan)
+    // a filter on a payload field must not be pushed below the kernel
+    // and re-run it there
+    val filtered = ExtractPipeline
+      .extractNarrow(Transcripts.generate(spark, 5).toDF())
+      .filter(col("error").isNull)
+    assert(kernels(filtered.queryExecution.optimizedPlan) == 1,
+      filtered.queryExecution.optimizedPlan)
   }
 }

@@ -285,6 +285,7 @@ object SparkEntry {
       // IS one scan with a CASE tier (guide §2.4: the union's second
       // Exchange and second scan removed; same rows, oracle-proven)
       t(s, dir, "orders")
+        .filter(col("o_totalprice").isNotNull) // neither branch takes NULL
         .select(col("o_custkey").as("custkey"),
           when(col("o_totalprice") > 200000, lit("hi")).otherwise(lit("lo"))
             .as("tier"))
@@ -1126,8 +1127,10 @@ object SparkEntry {
       val parents = dirs.map(d => d.substring(0, d.lastIndexOf('/')))
       require(parents.distinct.size == 1,
         "corpus dirs must share a parent for the glob source")
-      val glob = parents.head + dirs.map(_.substring(parents.head.length + 1))
-        .mkString("/{", ",", "}")
+      val names = dirs.map(_.substring(parents.head.length + 1))
+      require(names.forall(_.matches("[A-Za-z0-9_]+")),
+        s"corpus dir names must be [A-Za-z0-9_]+ for the brace glob: $names")
+      val glob = parents.head + names.mkString("/{", ",", "}")
       val files = s.readStream.format("binaryFile").schema(schema).load(glob)
       val sink: (DataFrame, Long) => Unit =
         (batch, _) => batch.write.mode("append").parquet(out)

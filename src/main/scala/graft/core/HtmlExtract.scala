@@ -17,8 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Hand-rolled scanner — no external HTML parser exists in the sandbox,
   * and the per-row cost must stay allocation-light at 10^12 turns. The
-  * whole pass is thread-free and single-row-scoped (safe in any
-  * mapPartitions task).
+  * whole pass is thread-free and single-row-scoped (safe inside the
+  * `ExtractStats`/`ExtractTurn` Catalyst expressions at any parallelism).
   */
 object HtmlExtract {
 

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.annotation.switch
 import scala.collection.mutable.ArrayBuffer
 import scala.util.matching.Regex
 
@@ -10,7 +11,8 @@ import scala.util.matching.Regex
   * (:243-296) and document-type classification (:368-402). The whole
   * machine is pure per turn: one `Element` stream in, one `MultiDoc` out;
   * no state crosses turns, which is the correctness argument for running
-  * it inside `mapPartitions` at any parallelism (SURVEY.md §3.4).
+  * it inside the `ExtractStats`/`ExtractTurn` Catalyst expressions at any
+  * parallelism (SURVEY.md §3.4).
   *
   * Offset semantics (SURVEY.md §2.3): header/body segment offsets are a
   * running `globalOffset` advanced by `element.text.length` after each
@@ -21,17 +23,15 @@ import scala.util.matching.Regex
   */
 object Segmenter {
 
-  // --- patterns (DocumentParser.java:52-62) ---
-  private val possibleSubDocuments: Seq[Regex] = Seq(
-    "^\\s*приложение".r,
-    "^\\s*дополнительное\\s+соглашение".r)
+  // --- patterns (DocumentParser.java:52-62); possibleSubDocuments and
+  // notHeaderPattern are the literal scans startsSubDocument and
+  // hasNotHeaderPhrase ---
   private val alphabetPattern: Regex = "[A-Za-zА-Яа-я0-9]{5,}".r
   private val alphabetUpperCasePattern: Regex = "[A-ZА-Я]{5,}".r
   private val ruAlphabetPattern: Regex = "[А-Яа-я]{5,}".r
   private val engAlphabetPattern: Regex = "[A-Za-z]{5,}".r
   private val valuableSymbolPattern: Regex = "[A-Za-zА-Яа-я]".r
   private val endStringPattern: Regex = "\r|\n".r
-  private val notHeaderPattern: Regex = "решение +принято".r
 
   // --- constants (DocumentParser.java:63-68) ---
   private val maxHeaderLength = 1000
@@ -48,52 +48,66 @@ object Segmenter {
     */
   val maxBodyLength = 100000
 
-  /** keyword -> DocumentType (DocumentParser.java:37-50). The reference
-    * stores these in a HashMap whose iteration order only matters for
-    * exact-offset ties (strict `>` at :377); we fix declaration order.
-    * The reference matches compiled regexes of the form
-    * `<literal>([^А-Яа-я]|$)` against a lowercased copy of the text
-    * (:375,:390); we evaluate the SAME grammar with allocation-free
-    * char scans over the original string (char-level lowercase compares
-    * — exact for the Cyrillic/Latin ranges involved): no toLowerCase
-    * copy, no Matcher. Parity with the original regexes is pinned by
-    * KeywordScanSpec's property test.
+  /** Doc-type classification keywords (DocumentParser.java:37-50). The
+    * reference matches eleven compiled `<keyword>([^А-Яа-я]|$)` regexes,
+    * one at a time, against a lowercased copy of each segment (:375,:390).
+    * [[keywordFirsts]] evaluates the same grammar in ONE left-to-right pass
+    * over the original string: it switches on the current char's keyword
+    * group (the first letters д/у/п/к/р/с, either case) and records, per
+    * probe, the first index where that probe matches. Each
+    * literal is compared against its precomputed uppercase twin char by
+    * char — exact for the Cyrillic letters and spaces the literals are
+    * made of — so there is no toLowerCase copy, no Matcher and no closure.
+    *
+    * Probe k's DocumentType is `probeTypes(k)`, in the declaration order
+    * the fold applies them (the reference's HashMap order only matters for
+    * exact-offset ties, strict `>` at :377). Parity of the pass with the
+    * original regexes is pinned by KeywordScanSpec.
     */
-  private val keywordProbes: Array[(String => Int, String)] = Array(
-    ((s: String) => keywordAt(s, "договор"), DocType.CONTRACT),
-    ((s: String) => charterAt(s), DocType.CHARTER),
-    ((s: String) => keywordAt(s, "протокол"), DocType.PROTOCOL),
-    ((s: String) => keywordAt(s, "положение"), DocType.REGULATION),
-    ((s: String) => keywordAt(s, "приказ"), DocType.ORDER),
-    ((s: String) => keywordAt(s, "план работ"), DocType.WORK_PLAN),
-    ((s: String) => supplementaryAt(s), DocType.SUPPLEMENTARY_AGREEMENT),
-    ((s: String) => keywordAt(s, "приложение"), DocType.ANNEX),
-    ((s: String) => keywordAt(s, "контракт"), DocType.CONTRACT),
-    ((s: String) => keywordAt(s, "решение"), DocType.PROTOCOL),
-    ((s: String) => keywordAt(s, "соглашение"), DocType.AGREEMENT))
+  private val probeTypes: Array[String] = Array(
+    DocType.CONTRACT, // договор
+    DocType.CHARTER, // у *с *т *а *в (spaced)
+    DocType.PROTOCOL, // протокол
+    DocType.REGULATION, // положение
+    DocType.ORDER, // приказ
+    DocType.WORK_PLAN, // план работ
+    DocType.SUPPLEMENTARY_AGREEMENT, // дополнительное\s+соглашение
+    DocType.ANNEX, // приложение
+    DocType.CONTRACT, // контракт
+    DocType.PROTOCOL, // решение
+    DocType.AGREEMENT) // соглашение
+  private[core] val nProbes: Int = probeTypes.length
 
-  // uppercase twins of the keyword literals, precomputed once: the scans
-  // compare (c == lower || c == upper) instead of mapping every char
-  // through Character.toLowerCase (which was slower than the Matchers it
-  // replaced)
-  private val upperTwin: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]
-    for (lit <- Seq("договор", "протокол", "положение", "приказ",
-        "план работ", "приложение", "контракт", "решение", "соглашение",
-        "устав", "дополнительное")) {
-      m.put(lit, lit.toUpperCase)
-    }
-    m
+  /** A lowercase literal and its uppercase twin. */
+  private final class Lit(s: String) {
+    private val lo: Array[Char] = s.toCharArray
+    private val up: Array[Char] =
+      s.toUpperCase(java.util.Locale.ROOT).toCharArray
+    val length: Int = lo.length
+    def is(j: Int, c: Char): Boolean = c == lo(j) || c == up(j)
   }
-
-  @inline private def chEq(c: Char, lo: Char, hi: Char): Boolean =
-    c == lo || c == hi
+  private val Dogovor = new Lit("договор")
+  private val Ustav = new Lit("устав")
+  private val Protokol = new Lit("протокол")
+  private val Polozhenie = new Lit("положение")
+  private val Prikaz = new Lit("приказ")
+  private val PlanRabot = new Lit("план работ")
+  private val Dopolnitelnoe = new Lit("дополнительное")
+  private val Prilozhenie = new Lit("приложение")
+  private val Kontrakt = new Lit("контракт")
+  private val Reshenie = new Lit("решение")
+  private val Soglashenie = new Lit("соглашение")
+  private val Prinyato = new Lit("принято")
 
   /** Boundary class of the keyword grammar: [А-Яа-я] (Ё/ё excluded,
     * exactly as in the reference regexes).
     */
   private def isCyrLetter(c: Char): Boolean =
     (c >= 'А' && c <= 'Я') || (c >= 'а' && c <= 'я')
+
+  /** `([^А-Яа-я]|$)` at index k. */
+  private def boundaryAt(s: String, k: Int): Boolean =
+    k >= s.length || !isCyrLetter(s.charAt(k))
 
   /** Java \s (the regex class used by the reference, NOT
     * Character.isWhitespace — they differ on NBSP and LINE-SEP).
@@ -102,119 +116,114 @@ object Segmenter {
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
       c == '\r'
 
-  /** First index where lowercase literal `lit` occurs (case-insensitive)
-    * followed by a non-[А-Яа-я] char or end — `lit([^А-Яа-я]|$)`.
+  /** `lit` occurs at index i, case-insensitively. */
+  private def litAt(s: String, i: Int, lit: Lit): Boolean = {
+    if (i + lit.length > s.length) return false
+    var j = 0
+    while (j < lit.length && lit.is(j, s.charAt(i + j))) j += 1
+    j == lit.length
+  }
+
+  /** `lit([^А-Яа-я]|$)` at index i. */
+  private def wordAt(s: String, i: Int, lit: Lit): Boolean =
+    litAt(s, i, lit) && boundaryAt(s, i + lit.length)
+
+  /** End of the phrase `a\s+b` (or `a +b` when `spaceOnly`) starting at
+    * index i, or -1 if it does not start there.
     */
-  private[core] def keywordAt(s: String, lit: String): Int = {
-    val up = upperTwin.get(lit)
-    val n = s.length
-    val m = lit.length
-    val l0 = lit.charAt(0)
-    val u0 = up.charAt(0)
+  private def phraseEnd(s: String, i: Int, a: Lit, b: Lit,
+                        spaceOnly: Boolean): Int = {
+    if (!litAt(s, i, a)) return -1
+    val k0 = i + a.length
+    var k = k0
+    while (k < s.length &&
+           (if (spaceOnly) s.charAt(k) == ' ' else isRegexWs(s.charAt(k)))) {
+      k += 1
+    }
+    if (k > k0 && litAt(s, k, b)) k + b.length else -1
+  }
+
+  /** `у *с *т *а *в([^А-Яа-я]|$)` at index i, given s(i) is у/У: spaces
+    * only, zero or more, between letters.
+    */
+  private def charterAt(s: String, i: Int): Boolean = {
+    var k = i + 1
+    var j = 1
+    while (j < Ustav.length) {
+      while (k < s.length && s.charAt(k) == ' ') k += 1
+      if (k >= s.length || !Ustav.is(j, s.charAt(k))) return false
+      k += 1
+      j += 1
+    }
+    boundaryAt(s, k)
+  }
+
+  /** Keyword group of each char in А..я: 1..6 for the first letters д, у,
+    * п, к, р, с (either case), 0 for the other letters. A table lookup plus
+    * a dense switch mispredicts fewer branches per char than a switch over
+    * the twelve chars.
+    */
+  private val firstLetterGroup: Array[Int] = {
+    val g = new Array[Int](64)
+    for ((c, k) <- "дупкрс".zipWithIndex) {
+      g(c - 'А') = k + 1
+      g(c.toUpper - 'А') = k + 1
+    }
+    g
+  }
+
+  /** Fills `first(k)` with the first index in `s` where probe k matches,
+    * -1 where it does not: the single pass described at [[probeTypes]].
+    */
+  private[core] def keywordFirsts(s: String, first: Array[Int]): Unit = {
+    java.util.Arrays.fill(first, -1)
     var i = 0
-    while (i + m <= n) {
-      val c0 = s.charAt(i)
-      if (c0 == l0 || c0 == u0) {
-        var j = 1
-        while (j < m && chEq(s.charAt(i + j), lit.charAt(j), up.charAt(j))) {
-          j += 1
-        }
-        if (j == m && (i + m >= n || !isCyrLetter(s.charAt(i + m)))) return i
+    while (i < s.length) {
+      val g = s.charAt(i) - 'А'
+      if (g >= 0 && g < 64) (firstLetterGroup(g): @switch) match {
+        case 1 => // д
+          if (first(0) < 0 && wordAt(s, i, Dogovor)) first(0) = i
+          if (first(6) < 0) {
+            val e = phraseEnd(s, i, Dopolnitelnoe, Soglashenie, false)
+            if (e >= 0 && boundaryAt(s, e)) first(6) = i
+          }
+        case 2 => // у
+          if (first(1) < 0 && charterAt(s, i)) first(1) = i
+        case 3 => // п
+          if (first(2) < 0 && wordAt(s, i, Protokol)) first(2) = i
+          if (first(3) < 0 && wordAt(s, i, Polozhenie)) first(3) = i
+          if (first(4) < 0 && wordAt(s, i, Prikaz)) first(4) = i
+          if (first(5) < 0 && wordAt(s, i, PlanRabot)) first(5) = i
+          if (first(7) < 0 && wordAt(s, i, Prilozhenie)) first(7) = i
+        case 4 => // к
+          if (first(8) < 0 && wordAt(s, i, Kontrakt)) first(8) = i
+        case 5 => // р
+          if (first(9) < 0 && wordAt(s, i, Reshenie)) first(9) = i
+        case 6 => // с
+          if (first(10) < 0 && wordAt(s, i, Soglashenie)) first(10) = i
+        case _ =>
       }
       i += 1
     }
-    -1
   }
 
-  /** `у *с *т *а *в([^А-Яа-я]|$)` — the spaced CHARTER keyword (spaces
-    * only, zero or more, between letters).
+  /** possibleSubDocuments (DocumentParser.java:52-53) on the lowercased
+    * text: `^\s*приложение` or `^\s*дополнительное\s+соглашение`.
     */
-  private[core] def charterAt(s: String): Int = {
-    val word = "устав"
-    val up = upperTwin.get(word)
-    val n = s.length
+  private[core] def startsSubDocument(t: String): Boolean = {
     var i = 0
-    while (i < n) {
-      val c0 = s.charAt(i)
-      if (c0 == 'у' || c0 == 'У') {
-        var k = i + 1
-        var li = 1
-        var ok = true
-        while (ok && li < word.length) {
-          while (k < n && s.charAt(k) == ' ') k += 1
-          if (k < n && chEq(s.charAt(k), word.charAt(li), up.charAt(li))) {
-            k += 1
-            li += 1
-          } else ok = false
-        }
-        if (ok && (k >= n || !isCyrLetter(s.charAt(k)))) return i
-      }
-      i += 1
-    }
-    -1
+    while (i < t.length && isRegexWs(t.charAt(i))) i += 1
+    litAt(t, i, Prilozhenie) ||
+      phraseEnd(t, i, Dopolnitelnoe, Soglashenie, false) >= 0
   }
 
-  /** `дополнительное\s+соглашение([^А-Яа-я]|$)`. */
-  private[core] def supplementaryAt(s: String): Int = {
-    val n = s.length
-    var from = 0
-    while (from < n) {
-      val i = keywordPrefixAt(s, "дополнительное", from)
-      if (i < 0) return -1
-      var k = i + "дополнительное".length
-      val wsStart = k
-      while (k < n && isRegexWs(s.charAt(k))) k += 1
-      if (k > wsStart) {
-        var j = 0
-        val lit = "соглашение"
-        val up = upperTwin.get(lit)
-        while (j < lit.length && k + j < n &&
-               chEq(s.charAt(k + j), lit.charAt(j), up.charAt(j))) {
-          j += 1
-        }
-        val end = k + lit.length
-        if (j == lit.length && (end >= n || !isCyrLetter(s.charAt(end)))) {
-          return i
-        }
-      }
-      from = i + 1
-    }
-    -1
-  }
-
-  /** First occurrence of `lit` at/after `from`, case-insensitive, no
-    * boundary requirement (prefix probe for the two-word keyword).
+  /** notHeaderPattern `решение +принято` (DocumentParser.java:62) found
+    * anywhere in the lowercased text.
     */
-  private def keywordPrefixAt(s: String, lit: String, from: Int): Int = {
-    val up = upperTwin.get(lit)
-    val n = s.length
-    val m = lit.length
-    val l0 = lit.charAt(0)
-    val u0 = up.charAt(0)
-    var i = from
-    while (i + m <= n) {
-      val c0 = s.charAt(i)
-      if (c0 == l0 || c0 == u0) {
-        var j = 1
-        while (j < m && chEq(s.charAt(i + j), lit.charAt(j), up.charAt(j))) {
-          j += 1
-        }
-        if (j == m) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Every doc-type keyword is Cyrillic: a text without a Cyrillic char
-    * cannot match any pattern, so the classifier can skip it entirely.
-    */
-  private def hasCyrillic(s: String): Boolean = {
+  private[core] def hasNotHeaderPhrase(t: String): Boolean = {
     var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c >= 'Ѐ' && c <= 'ӿ') return true
+    while (i < t.length) {
+      if (phraseEnd(t, i, Reshenie, Prinyato, true) >= 0) return true
       i += 1
     }
     false
@@ -462,22 +471,12 @@ object Segmenter {
   }
 
   /** ~ isSubDocument DOCX variant (DocumentParser.java:680-693).
-    * The three conjuncts are pure, so the cheapest (first-letter probe of
-    * the ^\s*приложение / ^\s*дополнительное patterns) runs first —
-    * semantics identical, no per-element toLowerCase on the hot path.
+    * The three conjuncts are pure, so the cheapest (the literal scan of
+    * the possibleSubDocuments prefixes) runs first.
     */
   private def isSubDocument(el: Element, doc: DocBuilder,
                             canBeHeader: CanBeHeader): Boolean = {
-    val t = el.text
-    var i = 0
-    while (i < t.length && t.charAt(i) <= ' ') i += 1
-    if (i >= t.length) return false
-    val c = t.charAt(i)
-    if (c != 'п' && c != 'П' && c != 'д' && c != 'Д') return false
-    val lower = t.toLowerCase
-    if (!possibleSubDocuments.exists(_.findFirstIn(lower).isDefined)) {
-      return false
-    }
+    if (!startsSubDocument(el.text)) return false
     if (allBodiesEmpty(doc)) return false // :695-702 gate
     canBeHeader == CanBeHeader.Must ||
       (canBeHeader == CanBeHeader.Can && isHeader(el))
@@ -802,8 +801,7 @@ object Segmenter {
       var previous: ParaBuilder = null
       val kept = new ArrayBuffer[ParaBuilder]
       for (p <- doc.paras) {
-        val demote = notHeaderPattern
-          .findFirstIn(p.header.text.toLowerCase).isDefined && previous != null
+        val demote = previous != null && hasNotHeaderPhrase(p.header.text)
         if (demote) {
           appendBody(previous, p.header.text)
           previous.body.addText(p.body.text)
@@ -824,32 +822,30 @@ object Segmenter {
   private def findDocumentType(doc: DocBuilder): Unit = {
     var result = DocType.UNKNOWN
     var firstOccurrence = Int.MaxValue
-    def scan(seg: ParaBuilder => SegBuilder): Unit = {
+    val first = new Array[Int](nProbes)
+    var pass = 0 // 0: headers; 1: bodies, only while still UNKNOWN
+    while (pass == 0 || (pass == 1 && result == DocType.UNKNOWN)) {
       var i = 0
       while (i < doc.paras.size && i < maxDocTypeDetectionHeaders) {
-        val s = seg(doc.paras(i))
-        val raw = s.text
-        if (hasCyrillic(raw)) { // no Cyrillic => no pattern can match
-          var k = 0
-          while (k < keywordProbes.length) {
-            val (probe, docType) = keywordProbes(k)
-            val idx = probe(raw)
-            if (idx >= 0) {
-              val abs = idx + s.offset
-              if ((firstOccurrence > abs && result != DocType.CHARTER) ||
-                  docType == DocType.CHARTER) {
-                result = docType
-                firstOccurrence = abs
-              }
+        val s = if (pass == 0) doc.paras(i).header else doc.paras(i).body
+        keywordFirsts(s.text, first)
+        var k = 0
+        while (k < nProbes) {
+          if (first(k) >= 0) {
+            val abs = first(k) + s.offset
+            val docType = probeTypes(k)
+            if ((firstOccurrence > abs && result != DocType.CHARTER) ||
+                docType == DocType.CHARTER) {
+              result = docType
+              firstOccurrence = abs
             }
-            k += 1
           }
+          k += 1
         }
         i += 1
       }
+      pass += 1
     }
-    scan(_.header)
-    if (result == DocType.UNKNOWN) scan(_.body)
     doc.docType = result
   }
 

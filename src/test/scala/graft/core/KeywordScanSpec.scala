@@ -4,20 +4,54 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** Parity of the allocation-free scanners with the regex grammars they
-  * replace (Segmenter keyword probes, Tokenizer list/bold markup): the
-  * scans must agree with the original compiled patterns on every input.
+  * replace (Segmenter's single-pass doc-type keyword scan and its
+  * sub-document / not-header literal scans, Tokenizer list/bold markup):
+  * the scans must agree with the original compiled patterns, run on the
+  * lowercased text as the reference does, on every input.
   */
 class KeywordScanSpec extends AnyFunSuite {
 
   private val rnd = new Random(0xC0FFEE)
 
-  // --- keyword probes vs <literal>([^А-Яа-я]|$) regexes ---
+  // --- keyword scans vs the reference regexes (DocumentParser.java) ---
 
   private def regexAt(lower: String, pattern: String): Int =
     pattern.r.findFirstMatchIn(lower).map(_.start).getOrElse(-1)
 
-  private val alphabet =
-    "абвгдеёжзиклмнопрстуфхцчшщыьэюя АБВГДЕЖПРСТУЯ abcXYZ0123.,-\t\n"
+  /** The eleven `<keyword>([^А-Яа-я]|$)` doc-type patterns, in the
+    * Segmenter's probe order.
+    */
+  private val probePatterns: Seq[String] = Seq(
+    "договор", "у *с *т *а *в", "протокол", "положение", "приказ",
+    "план работ", "дополнительное\\s+соглашение", "приложение",
+    "контракт", "решение", "соглашение").map(_ + "([^А-Яа-я]|$)")
+
+  private def firsts(raw: String): Seq[Int] = {
+    val out = new Array[Int](Segmenter.nProbes)
+    Segmenter.keywordFirsts(raw, out)
+    out.toSeq
+  }
+
+  // Ё/ё are outside [А-Яа-я] (a keyword boundary); \u000B/\f are \s, the
+  // control chars \u0001/\u001C, NBSP and LINE SEP are not
+  private val alphabet = "абвгдеёжзиклмнопрстуфхцчшщыьэюя " +
+    "АБВГДЕЁЖПРСТУЯ abcXYZ0123.,-\t\n\r\u000B\f\u0001\u001C\u00A0\u2028"
+
+  private val fragments = Seq("договор", "устав", "у с т а в", "УСТАВ",
+    "у  с т ав", "протокол", "приказ", "план работ", "план  работ",
+    "дополнительное", "соглашение", "дополнительное  соглашение",
+    "дополнительное\tсоглашение", "дополнительное соглашениея соглашение",
+    "дополнительноесоглашение", "приложение", "контракт", "решение",
+    "положение", "договора", "уст ав", "решением", "решение  принято",
+    "решение принято", "решениепринято", "договорё", "ёсоглашение",
+    "приказЁ")
+
+  /** Random case per char: the scans compare against both case twins. */
+  private def mixCase(w: String): String = rnd.nextInt(3) match {
+    case 0 => w
+    case 1 => w.toUpperCase
+    case _ => w.map(c => if (rnd.nextBoolean()) c.toUpper else c)
+  }
 
   private def randomText(maxLen: Int): String = {
     val n = rnd.nextInt(maxLen)
@@ -25,34 +59,64 @@ class KeywordScanSpec extends AnyFunSuite {
     for (_ <- 0 until n) {
       // bias toward keyword fragments so matches actually occur
       rnd.nextInt(6) match {
-        case 0 => sb ++= Seq("договор", "устав", "у с т а в", "УСТАВ",
-          "протокол", "приказ", "план работ", "дополнительное",
-          "соглашение", "дополнительное  соглашение", "приложение",
-          "контракт", "решение", "положение", "договора",
-          "уст ав", "решением")(rnd.nextInt(17))
+        case 0 => sb ++= mixCase(fragments(rnd.nextInt(fragments.size)))
         case _ => sb += alphabet.charAt(rnd.nextInt(alphabet.length))
       }
     }
     sb.toString
   }
 
-  test("keywordAt / charterAt / supplementaryAt == reference regexes") {
-    val simple = Seq("договор", "протокол", "положение", "приказ",
-      "план работ", "приложение", "контракт", "решение", "соглашение")
-    for (_ <- 1 to 3000) {
-      val raw = randomText(60)
+  test("keywordFirsts: one pass == the 11 reference regexes") {
+    assert(Segmenter.nProbes == probePatterns.size)
+    def check(raw: String): Unit = {
       val lower = raw.toLowerCase
-      for (lit <- simple) {
-        assert(Segmenter.keywordAt(raw, lit) ==
-          regexAt(lower, java.util.regex.Pattern.quote(lit) + "([^А-Яа-я]|$)"),
-          s"keywordAt($lit) on <$raw>")
-      }
-      assert(Segmenter.charterAt(raw) ==
-        regexAt(lower, "у *с *т *а *в([^А-Яа-я]|$)"), s"charterAt on <$raw>")
-      assert(Segmenter.supplementaryAt(raw) ==
-        regexAt(lower, "дополнительное\\s+соглашение([^А-Яа-я]|$)"),
-        s"supplementaryAt on <$raw>")
+      assert(firsts(raw) == probePatterns.map(regexAt(lower, _)),
+        s"keywordFirsts on <$raw>")
     }
+    // short and long segments: keywords can sit hundreds of chars in
+    for (_ <- 1 to 3000) check(randomText(rnd.nextInt(3) match {
+      case 0 => 60
+      case 1 => 200
+      case _ => 600
+    }))
+    for (raw <- Seq("", "д", "у", "у с т а", "Устав", "У С Т А В.",
+        "у с т а вы", "ДОПОЛНИТЕЛЬНОЕ СОГЛАШЕНИЕ", "дополнительное\n\nсоглашение",
+        "дополнительное\u00A0соглашение", "дополнительное соглашениея соглашение",
+        "договорЁ", "ёдоговор", "договорёдоговора", "ПЛАН РАБОТ", "план\tработ")) {
+      check(raw)
+    }
+    // overlapping matches are each reported from their own start
+    assert(firsts("Дополнительное соглашение")(6) == 0)
+    assert(firsts("Дополнительное соглашение")(10) == 15)
+    assert(firsts("x дополнительное соглашениея соглашение")(6) == -1)
+    assert(firsts("У С Т А В")(1) == 0)
+  }
+
+  private val subDocPatterns =
+    Seq("^\\s*приложение", "^\\s*дополнительное\\s+соглашение")
+
+  test("startsSubDocument / hasNotHeaderPhrase == reference regexes") {
+    def check(raw: String): Unit = {
+      val lower = raw.toLowerCase
+      assert(Segmenter.startsSubDocument(raw) ==
+        subDocPatterns.exists(regexAt(lower, _) >= 0), s"subdoc on <$raw>")
+      assert(Segmenter.hasNotHeaderPhrase(raw) ==
+        (regexAt(lower, "решение +принято") >= 0), s"not-header on <$raw>")
+    }
+    // every whitespace-like prefix before a sub-document keyword: only \s
+    // may precede it (the \u0001/\u001C/NBSP/LINE SEP prefixes must fail)
+    val lead = Seq("", " ", "  \t", "\n\r", "\u000B", "\f", "\u0001",
+      "\u001C", "\u00A0", "\u2028", " \u0001 ", "x ")
+    for (l <- lead; f <- fragments; tail <- Seq("", " тело", "ы")) {
+      check(l + mixCase(f) + tail)
+    }
+    for (_ <- 1 to 3000) {
+      check(lead(rnd.nextInt(lead.size)) + randomText(200))
+    }
+    assert(!Segmenter.startsSubDocument("\u0001приложение"))
+    assert(Segmenter.startsSubDocument("\u000BПРИЛОЖЕНИЕ 1"))
+    assert(Segmenter.hasNotHeaderPhrase("Итог: РЕШЕНИЕ   Принято."))
+    assert(!Segmenter.hasNotHeaderPhrase("решение\tпринято"))
   }
 
   // --- tokenizer list/bold markup vs the original regex grammars ---

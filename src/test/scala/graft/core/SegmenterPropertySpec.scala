@@ -147,6 +147,104 @@ class SegmenterPropertySpec extends AnyFunSuite {
     }
   }
 
+  // --- p8: the whole doc-type fold vs a regex oracle (:368-402) ---
+
+  /** keyToDocType (DocumentParser.java:37-50) as compiled regexes, in the
+    * Segmenter's probe order.
+    */
+  private val docTypeRegexes: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "договор" -> DocType.CONTRACT, "у *с *т *а *в" -> DocType.CHARTER,
+    "протокол" -> DocType.PROTOCOL, "положение" -> DocType.REGULATION,
+    "приказ" -> DocType.ORDER, "план работ" -> DocType.WORK_PLAN,
+    "дополнительное\\s+соглашение" -> DocType.SUPPLEMENTARY_AGREEMENT,
+    "приложение" -> DocType.ANNEX, "контракт" -> DocType.CONTRACT,
+    "решение" -> DocType.PROTOCOL, "соглашение" -> DocType.AGREEMENT)
+    .map { case (k, t) => (k + "([^А-Яа-я]|$)").r -> t }
+
+  /** findDocumentType (DocumentParser.java:368-402) over a document's
+    * paragraphs: the first 5 headers, earliest absolute offset wins
+    * (strict `>`), a CHARTER match always wins, and the first 5 bodies
+    * only if still UNKNOWN. Returns the type and whether bodies decided it.
+    */
+  private def oracleDocType(d: Doc): (String, Boolean) = {
+    var result = DocType.UNKNOWN
+    var firstOccurrence = Int.MaxValue
+    def scan(seg: Para => TextSeg): Unit =
+      for (p <- d.paragraphs.take(5); (re, docType) <- docTypeRegexes) {
+        val s = seg(p)
+        re.findFirstMatchIn(s.text.toLowerCase).foreach { m =>
+          val abs = m.start + s.offset
+          if ((firstOccurrence > abs && result != DocType.CHARTER) ||
+              docType == DocType.CHARTER) {
+            result = docType
+            firstOccurrence = abs
+          }
+        }
+      }
+    scan(_.header)
+    if (result != DocType.UNKNOWN) (result, false)
+    else { scan(_.body); (result, true) }
+  }
+
+  // no "принято": the PROTOCOL post-pass demotes `решение +принято`
+  // headers AFTER classification, which would change the paragraphs the
+  // oracle reads (that demotion is pinned by the golden g19 tests)
+  private val docWords = Vector("договор", "договора", "устав", "у с т а в",
+    "уставной", "протокол", "положение", "приказ", "план работ",
+    "дополнительное соглашение", "дополнительное  соглашение",
+    "приложение", "контракт", "решение", "решением", "соглашение",
+    "соглашениё", "ёлка", "тело", "пункт", "текст", "раздел", "сторона",
+    "стороны", "clause", "annex", "12", "№5.")
+
+  private def docPhrase(rnd: Random): String =
+    (0 until 1 + rnd.nextInt(5)).map { _ =>
+      val w = docWords(rnd.nextInt(docWords.size))
+      rnd.nextInt(3) match {
+        case 0 => w.toUpperCase
+        case 1 => w.capitalize
+        case _ => w
+      }
+    }.mkString(" ")
+
+  /** 1-9 paragraphs: a centered (forced) header line — sometimes opening
+    * with a sub-document keyword, which starts a new document — and 0-2
+    * body lines; keywords land anywhere in either.
+    */
+  private def genDocTurn(rnd: Random): String =
+    (0 until 1 + rnd.nextInt(9)).flatMap { _ =>
+      val opener = rnd.nextInt(6) match {
+        case 0 => "Приложение "
+        case 1 => "ДОПОЛНИТЕЛЬНОЕ СОГЛАШЕНИЕ "
+        case _ => ""
+      }
+      val header = "^C " + opener + docPhrase(rnd)
+      header +: (0 until rnd.nextInt(3)).map(_ => docPhrase(rnd))
+    }.mkString("\n")
+
+  test("p8 doc types == findDocumentType regex oracle (:368-402)") {
+    val rnd = new Random(49L)
+    val seen = scala.collection.mutable.Set[String]()
+    var fromBodies = 0
+    var multiDoc = 0
+    for (_ <- 0 until 1500) {
+      val turn = genDocTurn(rnd)
+      val md = Segmenter.segment(Tokenizer.tokenize(turn))
+      val expected = md.documents.map(oracleDocType)
+      assert(md.documents.map(_.docType) == expected.map(_._1),
+        s"doc types for:\n$turn")
+      seen ++= expected.map(_._1)
+      fromBodies += expected.count(e => e._2 && e._1 != DocType.UNKNOWN)
+      if (md.documents.size > 1) multiDoc += 1
+    }
+    // the generator reaches every keyword type, the body fallback and
+    // multi-document turns
+    assert(seen == Set(DocType.UNKNOWN, DocType.CONTRACT, DocType.CHARTER,
+      DocType.PROTOCOL, DocType.REGULATION, DocType.ORDER,
+      DocType.WORK_PLAN, DocType.SUPPLEMENTARY_AGREEMENT, DocType.ANNEX,
+      DocType.AGREEMENT))
+    assert(fromBodies > 0 && multiDoc > 0)
+  }
+
   test("p6 doc type is always a known enum name") {
     val known = Set(DocType.UNKNOWN, DocType.CONTRACT, DocType.CHARTER,
       DocType.PROTOCOL, DocType.REGULATION, DocType.CHARITY_POLICY,

@@ -76,7 +76,8 @@ object Bench {
       // 1g executor heaps ON PURPOSE: the kernel needs little heap, and
       // 8 executors x 4g measured a catastrophic pass-2/3 anomaly (task
       // wall 15x, ~60s of first-touch/THP work across 32GB of young gen
-      // as the heaps grow — graft.tools.BenchOrderProbe); 1g heals it.
+      // as the heaps grow; reproduced by running local[N] sessions and
+      // then an 8x4 local-cluster session in one driver JVM); 1g heals it.
       // throughput GC with a large young gen: the kernel's allocations
       // die young; ergonomic young-gen defaults caused 2x the minor-GC
       // copy traffic (measured +10% throughput from NewRatio=1).
@@ -133,7 +134,7 @@ object Bench {
     * its row count, observed by that same job. A `count()` would let
     * column pruning drop the extraction kernel and time only the scan.
     */
-  private[graft] def payloadToNoop(payload: Dataset[_]): Long = {
+  private def payloadToNoop(payload: Dataset[_]): Long = {
     val rows = Observation()
     payload.observe(rows, count(lit(1)).as("rows"))
       .write.format("noop").mode("overwrite").save()

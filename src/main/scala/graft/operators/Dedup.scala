@@ -5,9 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for web-scale corpora.
   *
-  * Scale design, shared by every near-dup variant (MinHash LSH here,
-  * SimHash here, winnowing in [[Winnow]], embedding-cosine in
-  * [[Similarity]]):
+  * Every near-dup family (MinHash LSH and SimHash here, winnowing in
+  * [[Winnow]], embedding cosine in [[Similarity]]) is one skeleton, the
+  * "shared scale plumbing" section below, plus a small front that
+  * supplies the family's collapse key, bucket keys and verify metric:
+  *
+  *   [[collapse]] -> front's (id, bkey) rows -> [[bucketPairs]] ->
+  *   exact verify at representative level ([[verifyPairs]]; winnowing
+  *   counts shared buckets instead) -> [[RepPairs]] -> [[pairs]]
+  *   (member-pair expansion) or [[groups]] (connected components over
+  *   representative pairs plus one mapping join).
+  *
+  * Scale design of that skeleton:
   *
   *   1. candidates meet only inside an LSH/band/chunk bucket — never an
   *      all-pairs product; the shuffle key is the bucket hash;
@@ -30,8 +39,8 @@ import org.apache.spark.sql.functions._
   *
   * Note on output size: the pair contract is inherently quadratic in
   * cluster size (a verified 10^4-member cluster IS ~5*10^7 pairs). When a
-  * summarized report is enough, use [[exactDupGroups]] + the rep-level
-  * pairs instead of the expanded output.
+  * summarized report is enough, use [[exactDupGroups]] or a `*Groups`
+  * surface instead of the expanded output.
   */
 object Dedup {
 
@@ -104,8 +113,9 @@ object Dedup {
     * 10^9-member cluster is 10^9 narrow rows, never one driver-sized
     * row; the dup-mapping join is AQE-skew-splittable because the
     * aggregated side has one row per key, and it only carries keys whose
-    * group size exceeds 1. The aggregate is persisted and eagerly counted
-    * (a cheap cached job) — the count decides `dupMapping = None` and
+    * group size exceeds 1. The aggregate is a lazy `localCheckpoint`
+    * that the one counts action below materializes (no separate
+    * materialization job) — the count decides `dupMapping = None` and
     * feeds auto-sized LSH keyspaces. Input columns: (id, gk, payload).
     */
   private[operators] def collapse(keyed: DataFrame): Collapsed = {
@@ -182,8 +192,9 @@ object Dedup {
     }
   }
 
-  /** Distinct candidate pairs from (id, bkey) rows via [[boundedBuckets]].
-    * Output: distinct (id_a < id_b) pairs.
+  /** Candidate pairs from (id, bkey) rows via [[boundedBuckets]]: every
+    * (id_a < id_b) pair of each bucket, one row per bucket the pair
+    * shares — [[verifyPairs]] keeps them distinct, winnowing counts them.
     */
   private[operators] def bucketPairs(banded: DataFrame, maxBucket: Int,
       statsObs: Option[Observation]): DataFrame =
@@ -197,19 +208,61 @@ object Dedup {
       // two band keys of a doc colliding to one 64-bit bkey): a self-pair
       // would survive every verify at similarity 1.0
       .filter(col("id_a") =!= col("id_b"))
-      .dropDuplicates("id_a", "id_b")
+
+  /** Exact verification of the distinct candidate pairs: each side's
+    * payload rejoins by id from `reps` ([[Collapsed.reps]], (id,
+    * payload)) only AFTER bucketing — carrying it through the band
+    * shuffle would replicate it per band — and `score(a, b)` runs on
+    * candidates only (few, so AQE broadcasts them). Rows whose `metric`
+    * fails `keep` are dropped. Output: (id_a, id_b, metric).
+    */
+  private[operators] def verifyPairs(cand: DataFrame, reps: DataFrame,
+      metric: String, score: (Column, Column) => Column,
+      keep: Column => Column): DataFrame =
+    cand.dropDuplicates("id_a", "id_b")
+      .join(reps.select(col("id").as("id_a"), col("payload").as("_pa")),
+        "id_a")
+      .join(reps.select(col("id").as("id_b"), col("payload").as("_pb")),
+        "id_b")
+      .withColumn(metric, score(col("_pa"), col("_pb")))
+      .filter(keep(col(metric)))
+      .select("id_a", "id_b", metric)
+
+  /** A family front's result: the [[collapse]], the verified
+    * REPRESENTATIVE pairs `(id_a, id_b, <metric>)`, and the internal-pair
+    * gate `eligible(rep, <metric>)` — the exact groups whose members pair
+    * with each other, with the metric those pairs carry (identical
+    * members: jaccard 1.0, hamming 0, cos 1.0, winnowing's n_shared = the
+    * group's fingerprint count). The front computes the gate once, so the
+    * pair and group surfaces cannot drift apart on it.
+    */
+  private[operators] final case class RepPairs(collapsed: Collapsed,
+      verified: DataFrame, eligible: DataFrame)
+
+  /** The pair surface of every family. Without exact duplicates the rep
+    * pairs ARE the member pairs; otherwise cross pairs inherit their rep
+    * pair's metric ([[expandCross]]) and members of an eligible group
+    * pair with each other ([[expandInternal]]).
+    */
+  private[operators] def pairs(r: RepPairs): DataFrame =
+    r.collapsed.dupMapping match {
+      case None => r.verified
+      case Some(mapping) =>
+        expandCross(r.verified, mapping, r.verified.columns(2))
+          .unionByName(expandInternal(mapping, r.eligible))
+    }
 
   /** Expand verified representative pairs to member pairs: every member
     * of rep_a's exact group pairs with every member of rep_b's, carrying
-    * the verified payload column (identical inputs have identical
+    * the verified metric column (identical inputs have identical
     * shingles/vectors, so the metric transfers exactly). `mapping` is
     * the DUP-ONLY mapping of [[collapse]], so the joins are left joins
     * with identity fallback — singleton reps stream through the (usually
     * broadcast) join unexpanded instead of shuffling through a
     * full-corpus mapping.
     */
-  private[operators] def expandCross(repPairs: DataFrame, mapping: DataFrame,
-      payloadCol: String): DataFrame =
+  private def expandCross(repPairs: DataFrame, mapping: DataFrame,
+      metric: String): DataFrame =
     repPairs
       .join(mapping.select(col("rep").as("id_a"), col("id").as("_ma")),
         Seq("id_a"), "left")
@@ -220,24 +273,65 @@ object Dedup {
           coalesce(col("_mb"), col("id_b"))).as("id_a"),
         greatest(coalesce(col("_ma"), col("id_a")),
           coalesce(col("_mb"), col("id_b"))).as("id_b"),
-        col(payloadCol))
+        col(metric))
 
-  /** Internal pairs of each exact group restricted to eligible reps
-    * (single-column `rep` DataFrame): (id_a < id_b) member pairs.
+  /** Internal pairs of each eligible exact group: (id_a < id_b, metric)
+    * member pairs, the metric taken from `eligible(rep, metric)`.
     * `mapping` is dup-only, so singleton groups never reach the
     * self-join; rep-member pairs come straight off the dup rows since
     * rep = min(id) < member id.
     */
-  private[operators] def expandInternal(mapping: DataFrame,
-      eligibleReps: DataFrame): DataFrame = {
-    val dups = mapping.filter(col("id") =!= col("rep"))
-      .join(eligibleReps, Seq("rep"), "left_semi")
-    val repPairs = dups.select(col("rep").as("id_a"), col("id").as("id_b"))
-    val dupPairs = dups.select(col("rep"), col("id").as("id_a"))
+  private def expandInternal(mapping: DataFrame,
+      eligible: DataFrame): DataFrame = {
+    val metric = col(eligible.columns(1))
+    val dups = mapping.filter(col("id") =!= col("rep")).join(eligible, "rep")
+    val repPairs = dups.select(col("rep").as("id_a"), col("id").as("id_b"),
+      metric)
+    val dupPairs = dups.select(col("rep"), col("id").as("id_a"), metric)
       .join(dups.select(col("rep"), col("id").as("id_b")), "rep")
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+      .select(col("id_a"), col("id_b"), metric)
     repPairs.unionByName(dupPairs)
+  }
+
+  /** The group surface of every family: transitive near-dup labels
+    * `(id, group_id)` WITHOUT the quadratic member-pair expansion.
+    * Connected components run over the verified representative pairs
+    * only, then exact-group members attach through the dup-only mapping
+    * (the rep's component when the rep is paired, else the rep id — such
+    * groups are dup groups by themselves). A member's group is its rep's
+    * component, and the component minimum over members equals the
+    * minimum over reps (each rep is its group's min id), so the output is
+    * row-for-row `Components.dupGroups(pairs(r))` (pinned by
+    * ComponentsSpec) at O(reps + dup members) instead of
+    * O(sum cluster^2). Exact groups outside `eligible` and unpaired
+    * contribute no labels, matching the pair surface's expansion.
+    */
+  private[operators] def groups(r: RepPairs): DataFrame = {
+    val repLabels = Components.connectedComponents(
+      r.verified.select("id_a", "id_b"))
+    r.collapsed.dupMapping match {
+      case None =>
+        repLabels.select(col("id"), col("component").as("group_id"))
+      case Some(mapping) =>
+        // a member is labeled when its rep is PAIRED (component inherited
+        // — eligibility is irrelevant, matching expandCross, which
+        // expands cross pairs unconditionally) or when its group is
+        // unpaired but ELIGIBLE (label = rep id, matching
+        // expandInternal's gate)
+        val memberLabels = mapping
+          .join(repLabels.withColumnRenamed("id", "rep"), Seq("rep"), "left")
+          .join(r.eligible.select(col("rep"), lit(true).as("_eligible")),
+            Seq("rep"), "left")
+          .filter(col("component").isNotNull || col("_eligible"))
+          .select(col("id"),
+            coalesce(col("component"), col("rep")).as("group_id"))
+        val singlePaired = repLabels
+          .join(mapping.select(col("rep").as("id")).distinct(),
+            Seq("id"), "left_anti")
+          .select(col("id"), col("component").as("group_id"))
+        memberLabels.unionByName(singlePaired)
+    }
   }
 
   // ---------- cross-document repeated windows ----------
@@ -543,17 +637,19 @@ object Dedup {
 
   /** Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
     *
-    * Pipeline (scale rules 1-4 above):
-    * exact-collapse (persisted aggregate, [[collapse]]) -> per-rep
-    * signatures -> (id, bandKey)-only banding -> bounded in-bucket
-    * candidate pairs ([[boundedBuckets]]) -> text rejoin + exact Jaccard
-    * verify on candidates -> member-pair expansion (skipped outright when
-    * the corpus has no exact dups).
+    * The shared skeleton (scale rules 1-4 above) with a MinHash front:
+    * exact collapse on normalized text -> per-rep signatures ->
+    * (id, bandKey)-only banding -> bounded in-bucket candidate pairs ->
+    * text rejoin + exact Jaccard verify on candidates -> member-pair
+    * expansion (skipped outright when the corpus has no exact dups).
+    * Identical texts have Jaccard exactly 1.0; texts with no shingle
+    * are never banded, so their exact groups are not expanded either.
     *
-    * The persisted collapse aggregate means every downstream scan (band
-    * signatures, both verify rejoins, the eligibility gate) reads the
-    * cache instead of recomputing the collapse shuffle; the one extra
-    * input scan is the dup-mapping join, and only when dups exist.
+    * The collapse aggregate is a lazy `localCheckpoint` that the
+    * collapse's counts action materializes, so every downstream scan
+    * (band signatures, both verify rejoins, the eligibility gate) reads
+    * the checkpoint instead of recomputing the collapse shuffle; the one
+    * extra input scan is the dup-mapping join, and only when dups exist.
     *
     * @param maxBucket per-bucket candidate cap AFTER exact-collapse: an
     *                  oversized bucket contributes a deterministic
@@ -564,107 +660,41 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucket: Int = 64,
-      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = minhashRepPairs(df, textCol,
-      idCol, shingleK, numHashes, bands, threshold, maxBucket, statsObs)
-    // expansion: member pairs + internal pairs of exact groups
-    //    (identical texts have Jaccard exactly 1.0). Skipped entirely
-    //    when the corpus had no exact duplicates.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val internal = expandInternal(mapping, eligible)
-          .withColumn("jaccard", lit(1.0))
-        expandCross(verified, mapping, "jaccard").unionByName(internal)
-    }
-  }
+      statsObs: Option[Observation] = None): DataFrame =
+    pairs(minhashRepPairs(df, textCol, idCol, shingleK, numHashes, bands,
+      threshold, maxBucket, statsObs))
 
-  /** Transitive near-dup GROUP labeling `(id, group_id)` WITHOUT the
-    * quadratic member-pair expansion: connected components run over the
-    * verified REPRESENTATIVE pairs only, and exact-group members attach
-    * by one (broadcast-sized) mapping join afterwards. The pair surface
-    * ([[minhashNearDups]]) is inherently quadratic in exact-cluster
-    * size (a 10^4-member boilerplate cluster IS ~5*10^7 pairs); group
-    * labeling never needs those pairs — a member's group is its rep's
-    * component, and the component minimum over members equals the
-    * minimum over reps (each rep is already its group's min id). Output
-    * is row-for-row identical to
-    * `Components.dupGroups(minhashNearDups(...))` (pinned by
-    * ComponentsSpec) at O(reps + dup members) instead of
-    * O(sum cluster^2).
+  /** Transitive MinHash GROUP labeling `(id, group_id)` ([[groups]]):
+    * row-for-row `Components.dupGroups(minhashNearDups(...))` without
+    * the quadratic member-pair expansion.
     */
   def minhashNearDupGroups(
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucket: Int = 64,
-      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = minhashRepPairs(df, textCol,
-      idCol, shingleK, numHashes, bands, threshold, maxBucket, statsObs)
-    groupsFromRepPairs(collapsed, verified.select("id_a", "id_b"), eligible)
-  }
+      statsObs: Option[Observation] = None): DataFrame =
+    groups(minhashRepPairs(df, textCol, idCol, shingleK, numHashes, bands,
+      threshold, maxBucket, statsObs))
 
-  /** Shared labeling tail for every near-dup `*Groups` variant:
-    * connected components over the verified representative pairs, then
-    * exact-group members attach through the dup-only mapping (the rep's
-    * component when the rep is paired, else the rep id — such groups
-    * are dup groups by themselves). `eligibleReps` is the family's
-    * internal-pair gate (single `rep` column): exact groups excluded by
-    * it (e.g. shingle-less texts, zero vectors) contribute no labels,
-    * matching the pair surface's expansion semantics exactly.
-    */
-  private[operators] def groupsFromRepPairs(collapsed: Collapsed,
-      repPairs: DataFrame, eligibleReps: DataFrame): DataFrame = {
-    val repLabels = Components.connectedComponents(repPairs)
-    collapsed.dupMapping match {
-      case None =>
-        repLabels.select(col("id"), col("component").as("group_id"))
-      case Some(mapping) =>
-        // a member is labeled when its rep is PAIRED (component inherited
-        // — eligibility is irrelevant, matching expandCross, which
-        // expands cross pairs unconditionally) or when its group is
-        // unpaired but ELIGIBLE (label = rep id, matching
-        // expandInternal's gate)
-        val memberLabels = mapping
-          .join(repLabels.withColumnRenamed("id", "rep"), Seq("rep"), "left")
-          .join(eligibleReps.withColumn("_eligible", lit(true)),
-            Seq("rep"), "left")
-          .filter(col("component").isNotNull || col("_eligible"))
-          .select(col("id"),
-            coalesce(col("component"), col("rep")).as("group_id"))
-        val singlePaired = repLabels
-          .join(mapping.select(col("rep").as("id")).distinct(),
-            Seq("id"), "left_anti")
-          .select(col("id"), col("component").as("group_id"))
-        memberLabels.unionByName(singlePaired)
-    }
-  }
-
-  /** Shared front of the MinHash pipeline: collapse -> band -> bounded
-    * candidate pairs -> exact-Jaccard verify at REPRESENTATIVE level.
-    * Returns (collapsed, reps(id, text), verified(id_a, id_b, jaccard),
-    * eligible(rep)) — eligibility (>=1 shingle, the banding-stage gate)
-    * is computed HERE, once, so the pair and group surfaces can never
-    * drift apart on it.
+  /** MinHash front: verified(id_a, id_b, jaccard), eligible = reps with
+    * >= 1 shingle (the banding gate) at jaccard 1.0.
     */
   private def minhashRepPairs(
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int, numHashes: Int, bands: Int,
       threshold: Double, maxBucket: Int,
-      statsObs: Option[Observation]): (Collapsed, DataFrame, DataFrame, DataFrame) = {
+      statsObs: Option[Observation]): RepPairs = {
     val rowsPerBand = numHashes / bands
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("text"))
-
-    // 1. exact-dup collapse (128-bit key: no false merges); the text
+    // exact-dup collapse (128-bit key: no false merges); the text
     // payload rides the collapse agg, so reps need no recovery join
-    val collapsed = collapse(
-      base.select(col("id"), md5(TextStats.normalize(col("text"))).as("gk"),
-        col("text").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "text")
+    val collapsed = collapse(df.select(col(idCol).cast("long").as("id"),
+      md5(TextStats.normalize(col(textCol))).as("gk"),
+      col(textCol).as("payload")))
+    val reps = collapsed.reps
 
-    // 2. banding: (id, bandKey) rows ONLY through the shuffle
+    // banding: (id, bandKey) rows ONLY through the shuffle
     val banded = reps.as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         val sh = shingleSet(text, shingleK)
@@ -676,28 +706,17 @@ object Dedup {
       })
       .toDF("id", "bkey")
 
-    // 3. bounded candidate pairs between representatives
-    val candPairs = bucketPairs(banded, maxBucket, statsObs)
-
-    // 4. exact verify: rejoin TEXTS by id (narrow, cached), and only then
-    // — after the join has filtered to actual candidates — expand to
-    // shingle sets: projecting shingles before the join would ship every
-    // rep's shingle array through the join shuffle (the r01 defect,
-    // moved). candPairs is small, so AQE turns these into broadcast joins.
-    val ta = reps.select(col("id").as("id_a"), col("text").as("_t_a"))
-    val tb = reps.select(col("id").as("id_b"), col("text").as("_t_b"))
-    val verified = candPairs
-      .join(ta, "id_a").join(tb, "id_b")
-      .withColumn("jaccard", round(jaccard(
-        wordShingles(col("_t_a"), shingleK),
-        wordShingles(col("_t_b"), shingleK)), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-
-    val eligible = reps
-      .filter(size(wordShingles(col("text"), shingleK)) >= 1)
-      .select(col("id").as("rep"))
-    (collapsed, reps, verified, eligible)
+    // shingle sets are built only after the rejoin has narrowed the reps
+    // to actual candidates: projecting them before the join would ship
+    // every rep's shingle array through the join shuffle
+    val verified = verifyPairs(bucketPairs(banded, maxBucket, statsObs),
+      reps, "jaccard",
+      (a, b) => round(jaccard(wordShingles(a, shingleK),
+        wordShingles(b, shingleK)), 6),
+      _ >= threshold)
+    RepPairs(collapsed, verified,
+      reps.filter(size(wordShingles(col("payload"), shingleK)) >= 1)
+        .select(col("id").as("rep"), lit(1.0).as("jaccard")))
   }
 
   // ---------- SimHash ----------
@@ -763,59 +782,38 @@ object Dedup {
 
   /** SimHash near-dup pairs: multi-table chunk-pair keying (recall
     * guarantee for hamming <= 3, see [[simhashPairKeys]]), hamming
-    * verified exactly on the candidate set. Same scale pipeline as
-    * [[minhashNearDups]]: identical signatures (hamming 0) collapse to a
+    * verified exactly on the candidate set. The shared skeleton with a
+    * signature front: identical signatures (hamming 0) collapse to a
     * representative before keying — this collapse is semantically exact,
-    * not a hash approximation — and expand back afterwards.
+    * not a hash approximation — and expand back afterwards. Every
+    * signature group is eligible: its members pair at hamming 0.
     */
   def simhashNearDups(df: DataFrame, textCol: String, idCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 64,
-                      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs)
-    // expansion: cross pairs inherit the reps' hamming exactly (identical
-    // sig); internal pairs of a sig group have hamming 0. Skipped when no
-    // two docs share a signature.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val internal = expandInternal(mapping, eligible)
-          .withColumn("hamming", lit(0))
-        expandCross(verified, mapping, "hamming").unionByName(internal)
-    }
-  }
+                      statsObs: Option[Observation] = None): DataFrame =
+    pairs(simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket,
+      statsObs))
 
-  /** Transitive SimHash GROUP labeling `(id, group_id)` — the
-    * [[minhashNearDupGroups]] construction for the signature leg:
-    * connected components over verified representative pairs plus one
-    * mapping join, never the quadratic member-pair expansion. Every
-    * exact signature group is internally eligible (hamming 0).
-    */
+  /** Transitive SimHash GROUP labeling `(id, group_id)` ([[groups]]). */
   def simhashNearDupGroups(df: DataFrame, textCol: String, idCol: String,
                            maxHamming: Int = 3, maxBucket: Int = 64,
-                           statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs)
-    groupsFromRepPairs(collapsed, verified.select("id_a", "id_b"), eligible)
-  }
+                           statsObs: Option[Observation] = None): DataFrame =
+    groups(simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket,
+      statsObs))
 
-  /** Shared front of the SimHash pipeline: signature map -> exact
-    * collapse -> chunk-pair keys -> bounded candidate pairs -> exact
-    * hamming verify at REPRESENTATIVE level. Returns (collapsed,
-    * reps(id, sig), verified(id_a, id_b, hamming), eligible(rep)) —
-    * every signature group is internally eligible (hamming 0), and the
-    * shared gate lives here so the surfaces cannot drift.
+  /** SimHash front: collapse on the full signature (the group key IS the
+    * payload), chunk-pair keys, verified(id_a, id_b, hamming), every rep
+    * eligible at hamming 0.
     */
   private def simhashRepPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int, maxBucket: Int,
-      statsObs: Option[Observation]): (Collapsed, DataFrame, DataFrame, DataFrame) = {
+      statsObs: Option[Observation]): RepPairs = {
     require(maxHamming <= 3,
       "chunk-pair keying guarantees recall only for hamming <= 3 " +
         "(5 chunks - maxHamming flipped must leave >= 2 clean)")
     val spark = df.sparkSession
     import spark.implicits._
-    val sigs = df.select(col(idCol).cast("long").as("id"),
-        col(textCol).as("text"))
+    val sigs = df.select(col(idCol).cast("long"), col(textCol))
       .as[(Long, String)]
       .map { case (id, text) =>
         val toks = if (text == null) Array.empty[String]
@@ -823,12 +821,9 @@ object Dedup {
         (id, simhash64(toks))
       }
       .toDF("id", "sig")
-
-    // exact collapse on the full signature (hamming 0 — exact semantics;
-    // the group key IS the payload); persisted aggregate, dup-only mapping
     val collapsed = collapse(
       sigs.select(col("id"), col("sig").as("gk"), col("sig").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "sig")
+    val reps = collapsed.reps
 
     // (id, tableKey) rows only through the shuffle
     val keyed = reps.as[(Long, Long)]
@@ -836,17 +831,10 @@ object Dedup {
         simhashPairKeys(sig).iterator.map(k => (id, k))
       })
       .toDF("id", "bkey")
-    val candPairs = bucketPairs(keyed, maxBucket, statsObs)
-
-    // exact hamming verify on candidates (sig rejoin by id, cached)
-    val sa = reps.select(col("id").as("id_a"), col("sig").as("_sig_a"))
-    val sb = reps.select(col("id").as("id_b"), col("sig").as("_sig_b"))
-    val verified = candPairs
-      .join(sa, "id_a").join(sb, "id_b")
-      .withColumn("hamming",
-        bit_count(col("_sig_a").bitwiseXOR(col("_sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    (collapsed, reps, verified, reps.select(col("id").as("rep")))
+    val verified = verifyPairs(bucketPairs(keyed, maxBucket, statsObs),
+      reps, "hamming", (a, b) => bit_count(a.bitwiseXOR(b)),
+      _ <= maxHamming)
+    RepPairs(collapsed, verified,
+      reps.select(col("id").as("rep"), lit(0).as("hamming")))
   }
 }
